@@ -10,12 +10,16 @@ only composes and exposes them as a library call (:func:`curate`)
 and a CLI (``python -m pdf2dataset_spark.curate``).
 
 Scale posture: one logical plan end-to-end — no driver materialization
-between stages. The wide text column crosses a shuffle only where a
-stage's semantics require doc-grain movement (LSH banding, shard
-write); exact dedup uses the join strategy (hash + id shuffle only),
-and the near-dup pair set flows through narrow (id1, id2) edges.
-The train/test split and shard id are pure hash functions of the doc
-id — deterministic across reruns, cluster sizes, and partitionings.
+between stages. Four persisted cut points bound recomputation, each
+read by more than one branch: post-gates, post-exact-dedup, the
+(id, shingles) sets that LSH banding and exact-Jaccard verification
+both read (each doc is shingled once), and post-near-dup, which the
+shard write and the manifest both read. Exact dedup uses the join
+strategy (hash + id shuffle only); near-dup pair generation and
+components read only ids, shingle sets and narrow (id1, id2) edges,
+never the text column. The train/test split and shard id are pure hash
+functions of the doc id — deterministic across reruns, cluster sizes,
+and partitionings.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from pdf2dataset_spark.operators import cluster as cl
 from pdf2dataset_spark.operators import dedup as dd
 from pdf2dataset_spark.operators import shards as sh
 from pdf2dataset_spark.operators import text as tx
+from pdf2dataset_spark.plans.progress import observed
 
 
 def split_hash(id_col: str) -> F.Column:
@@ -45,7 +50,7 @@ def split_hash(id_col: str) -> F.Column:
 
 
 #: Stage cut points persisted by curate(); they must outlive the
-#: caller's actions (write + audit agg), so curate cannot unpersist
+#: caller's actions (shard write + manifest), so curate cannot unpersist
 #: them itself. run() releases them when done; library callers that
 #: loop over curate() should call release_caches() between iterations.
 #: Lock-guarded; multi-threaded callers building concurrent curated
@@ -100,13 +105,15 @@ def curate(
     ``split`` ('train'/'test') + ``shard_id``. Lazy — nothing runs
     until the caller writes or counts.
 
-    ``persist_stages`` (default on) marks the three multi-consumer
-    cut points (post-gates, post-exact-dedup, post-near-dup) as
-    MEMORY_AND_DISK persisted: the repetition/LSH/contamination
-    stages each join BACK onto their input, and without a persist
-    each branch re-executes the whole upstream lineage (measured
-    6.7x slower at 500k docs). Spark's ReusedExchange only kicks in
-    for identical subtrees inside one plan — cross-branch scan
+    ``persist_stages`` (default on) marks the multi-consumer cut
+    points (post-gates, post-exact-dedup, the shingle sets, post-
+    near-dup) as MEMORY_AND_DISK persisted: the repetition/LSH/
+    contamination stages each join BACK onto their input, banding and
+    verification both read the shingle sets (persisted only when
+    ``verify_jaccard`` gives them a second reader), and without a
+    persist each branch re-executes the whole upstream lineage
+    (measured 6.7x slower at 500k docs). Spark's ReusedExchange only
+    kicks in for identical subtrees inside one plan — cross-branch scan
     pruning differences defeat it, so explicit persistence is the
     correct composition primitive here. Pass False for a fully lazy
     plan (e.g. to explain/audit it)."""
@@ -149,19 +156,20 @@ def curate(
         # never delete a unique document. False drops candidates
         # unverified — ~2x faster on the near-dup stage, with the
         # false-positive drop risk bounded by the banding parameters.
-        sig_cols = [
-            F.col(id_col),
-            dd.minhash_signature(dd.shingles(text_col, n=shingle_n)).alias(
-                "minhash"
-            ),
-        ]
+        # one cut of the shingle sets: banding and verification both
+        # read it, so each doc is shingled once
+        sh_sets = out.select(
+            id_col, dd.shingles(text_col, n=shingle_n).alias("__sh")
+        )
         if verify_jaccard:
-            sig_cols.append(dd.shingles(text_col, n=shingle_n).alias("__sh"))
-        sig = out.select(*sig_cols)
+            sh_sets = cut(sh_sets)
+        sig = sh_sets.select(
+            id_col, dd.minhash_signature("__sh").alias("minhash")
+        )
         pairs = dd.lsh_candidate_pairs(sig, id_col=id_col, max_bucket=64)
         if verify_jaccard:
             pairs = dd.jaccard_pairs(
-                sig,
+                sh_sets,
                 id_col=id_col,
                 set_col="__sh",
                 threshold=jaccard_threshold,
@@ -201,15 +209,20 @@ def run(
     **opts,
 ) -> dict:
     """Read → curate → sharded write (+ manifest); returns the audit
-    report (input/kept counts per split — one extra agg pass over the
-    curated result, reusing the same plan)."""
+    report (input/kept counts per split). The per-split counts are
+    observed on the frame the shard write materializes, so the audit
+    costs no extra pass over the curated result."""
     df = spark.read.parquet(in_path)
     n_in = df.count()
     bench_path = opts.pop("benchmark_path", None)
     if bench_path:
         opts["benchmark"] = spark.read.parquet(bench_path)
     try:
-        cur = curate(df, **opts)
+        cur, audit = observed(
+            curate(df, **opts),
+            "curate_audit",
+            F.count_if(F.col("split") == "train").alias("train"),
+        )
         sh.write_shards(
             cur,
             out_path,
@@ -217,21 +230,16 @@ def run(
             id_col=opts.get("id_col", "doc_id"),
             token_col="q_n_tokens",
         )
-        by_split = {
-            r["split"]: r["n"]
-            for r in cur.groupBy("split")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        counts = audit.get
     finally:
-        # both consuming actions (write + audit agg) are done; drop the
+        # the write is the last action over the curated plan; drop the
         # stage/rank caches so repeated runs don't accumulate cached RDDs
         release_caches()
     report = {
         "input_docs": n_in,
-        "kept_docs": sum(by_split.values()),
-        "train_docs": by_split.get("train", 0),
-        "test_docs": by_split.get("test", 0),
+        "kept_docs": counts["n_rows"],
+        "train_docs": counts["train"],
+        "test_docs": counts["n_rows"] - counts["train"],
         "out_path": out_path,
     }
     return report

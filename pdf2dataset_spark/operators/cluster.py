@@ -7,18 +7,20 @@ iterative-DataFrame algorithm (SURVEY §2 notes iterative algorithms
 as the non-SQL-expressible class): smallest-label propagation until
 fixpoint.
 
-Scale posture: each iteration is one join + one aggregate on
-(node, label) pairs — narrow rows, hash-partitioned on node; lineage
-is cut with localCheckpoint each round (otherwise plans grow
-exponentially); iterations needed = graph diameter, which for
-near-dup clusters is tiny (dup clusters are cliques or short
-chains). The per-iteration driver-side convergence count is one
-scalar — unavoidable and standard for fixpoint loops.
+Scale posture: each round is one join + one aggregate on
+(node, label) pairs — narrow rows, hash-partitioned on node — and ONE
+action: the eager localCheckpoint that cuts the lineage (otherwise
+plans grow exponentially). The aggregate carries each node's old label
+next to its new one, and an Observation on the checkpointed frame
+counts the changed nodes, so convergence costs no join and no second
+count. The loop runs to the fixpoint; the min-label rule reaches it in
+diameter + 1 rounds, which for near-dup clusters is small (dup
+clusters are cliques or short chains).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -26,14 +28,19 @@ def connected_components(
     edges: DataFrame,
     id1: str = "id1",
     id2: str = "id2",
-    max_iter: int = 25,
 ) -> DataFrame:
     """(node, component) for every node in `edges`, component = the
     smallest node id reachable from it. Deterministic."""
-    sym = edges.select(
-        F.col(id1).alias("src"), F.col(id2).alias("dst")
-    ).union(edges.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
-    sym = sym.distinct().localCheckpoint(eager=True)
+    both_ways = F.array(
+        F.struct(F.col(id1).alias("src"), F.col(id2).alias("dst")),
+        F.struct(F.col(id2).alias("src"), F.col(id1).alias("dst")),
+    )
+    sym = (
+        edges.select(F.explode(both_ways).alias("e"))
+        .select("e.src", "e.dst")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
     labels = (
         sym.select(F.col("src").alias("node"))
@@ -41,27 +48,30 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
 
-    for _ in range(max_iter):
-        neighbor_labels = (
-            sym.join(labels, sym.src == labels.node)
-            .select(F.col("dst").alias("node"), "component")
+    changed = 1
+    while changed:
+        neighbor_labels = sym.join(labels, sym.src == labels.node).select(
+            F.col("dst").alias("node"),
+            "component",
+            F.lit(None).alias("old"),
         )
-        new_labels = (
-            labels.select("node", "component")
+        changes = Observation()
+        labels = (
+            labels.select("node", "component", F.col("component").alias("old"))
             .union(neighbor_labels)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
+            .agg(
+                F.min("component").alias("component"),
+                F.min("old").alias("old"),
+            )
+            .observe(
+                changes,
+                F.count_if(F.col("component") != F.col("old")).alias("n"),
+            )
+            .select("node", "component")
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+        changed = changes.get["n"]
     return labels
 
 

@@ -41,12 +41,12 @@ def progress_line(spark: SparkSession) -> str:
     )
 
 
-def observed(df, name: str = "audit"):
-    """Attach free audit metrics to a DataFrame: row count and error
-    count ride along with whatever action materializes it — no extra
-    pass over the data, which is the only acceptable way to collect
-    pipeline telemetry at 100 TB. Returns (df, Observation); read
-    `obs.get` AFTER an action has run.
+def observed(df, name: str = "audit", *extra):
+    """Attach free audit metrics to a DataFrame: row count, error
+    count and any ``extra`` aggregate columns ride along with whatever
+    action materializes it — no extra pass over the data, which is the
+    only acceptable way to collect pipeline telemetry at 100 TB.
+    Returns (df, Observation); read `obs.get` AFTER an action has run.
 
     Standard use: sink-side counts for every curation stage
     (quality-kept, deduped, chunk totals) collected during the single
@@ -63,4 +63,4 @@ def observed(df, name: str = "audit"):
                 F.when(F.col("error").isNotNull(), 1).otherwise(0)
             ).alias("n_errors")
         )
-    return df.observe(obs, *cols), obs
+    return df.observe(obs, *cols, *extra), obs

@@ -76,6 +76,46 @@ def test_run_writes_shards_and_manifest(spark, corpus, tmp_path):
     assert data.count() == 40
 
 
+#: Spark jobs one ``curate.run`` over the fixture corpus may launch
+#: (AQE query stages count as jobs): each doc is shingled once, each
+#: components round is one action and the per-split audit rides on
+#: the shard write. Any redundant pass over the plan adds jobs.
+RUN_MAX_JOBS = 37
+
+
+def test_run_job_count_and_audit_from_the_write(spark, corpus, tmp_path):
+    src = str(tmp_path / "in_jobs.parquet")
+    out = str(tmp_path / "curated_jobs")
+    corpus.write.parquet(src)
+    sc = spark.sparkContext
+    group = "test-curate-run-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        report = cu.run(spark, src, out, n_shards=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= RUN_MAX_JOBS
+    sites = [
+        info.name
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if (info := st.getStageInfo(s)) is not None
+    ]
+    assert not [
+        n for n in sites if n.startswith("collect at") and "curate.py" in n
+    ]
+    data = spark.read.parquet(out + "/data")
+    per_split = {
+        r["split"]: r["count"] for r in data.groupBy("split").count().collect()
+    }
+    assert report["train_docs"] == per_split.get("train", 0)
+    assert report["test_docs"] == per_split.get("test", 0)
+    assert report["kept_docs"] == sum(per_split.values()) == 40
+
+
 def test_cli_main(spark, corpus, tmp_path, capsys):
     src = str(tmp_path / "in2.parquet")
     out = str(tmp_path / "curated2")

@@ -275,6 +275,23 @@ def test_dedup_by_components_keeps_representatives(spark):
     assert kept == [1, 10, 50]  # one rep per cluster + the untouched doc
 
 
+def test_dedup_by_components_long_path_converges(spark):
+    from pdf2dataset_spark.operators.cluster import dedup_by_components
+
+    # a 30-doc path 0-100-101-...-127-5: label 0 needs 29 rounds to
+    # reach doc 5, beyond any fixed 25-round cap; stopping early would
+    # keep both 0 and 5 from one near-dup component
+    ids = [0, *range(100, 128), 5]
+    df = spark.createDataFrame(
+        [(i, f"doc{i}") for i in ids], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id1 long, id2 long"
+    )
+    kept = [r.doc_id for r in dedup_by_components(df, pairs).collect()]
+    assert kept == [0]
+
+
 def test_chunk_tokens_reconstructs_document(spark):
     from pdf2dataset_spark.operators import text as tx
 

@@ -662,6 +662,16 @@ class TestCcittLutReader:
                 # the aligned peek value resolves to (run, ln)
                 assert lut[code << (13 - ln)] == (run, ln)
 
+    def test_unknown_run_table_raises(self):
+        from pdf2dataset_spark.sources import ccitt
+
+        # an equal copy is still a third table: only the two module
+        # tables select a LUT, and the check must survive python -O
+        third = dict(ccitt._BLACK_DEC)
+        bits = ccitt._Bits(b"\xff\xff")
+        with pytest.raises(ValueError, match="unknown CCITT run table"):
+            ccitt._read_run(bits, third, "black")
+
 
 class TestJbig2HuffmanLut:
     """The lazy whole-code LUT + windowed bits() must reproduce the
